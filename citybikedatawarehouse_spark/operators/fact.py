@@ -49,11 +49,14 @@ _FACT_COLS = (
 def _with_measures(rides: DataFrame) -> DataFrame:
     dur = duration_seconds("started_at", "ended_at")
     dist = haversine_km("start_lat", "start_lng", "end_lat", "end_lng")
-    return (
-        rides.withColumn("trip_duration", dur)
-        .withColumn("distance", dist)
-        .withColumn("speed", speed_kmh(F.col("distance"), F.col("trip_duration")))
-        .withColumn("trip_duration", F.col("trip_duration").cast("int"))
+    # one projection: speed takes the fractional duration, the column
+    # keeps its INT cast
+    return rides.withColumns(
+        {
+            "trip_duration": dur.cast("int"),
+            "distance": dist,
+            "speed": speed_kmh(dist, dur),
+        }
     )
 
 
@@ -163,8 +166,9 @@ def build_ride_fact(
         # the reference dedups the assembled fact (v4:293) because its
         # 6-FK composite grain can collide; same observable semantics
         fact = fact.dropDuplicates(list(_FACT_COLS))
-    if keep_partition_cols:
-        fact = fact.withColumn("year", F.year("started_at")).withColumn(
-            "month", F.month("started_at")
-        )
-    return fact.drop("started_at")
+    partition_cols = (
+        [F.year("started_at").alias("year"), F.month("started_at").alias("month")]
+        if keep_partition_cols
+        else []
+    )
+    return fact.select(*_FACT_COLS, *partition_cols)

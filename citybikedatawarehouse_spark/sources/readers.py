@@ -87,11 +87,12 @@ def read_ride_csv(
         .csv(path)
     )
     if parse_timestamps:
+        parsed = {}
         for c in ("started_at", "ended_at"):
-            parsed = F.try_to_timestamp(F.col(c))
+            parsed[c] = F.try_to_timestamp(F.col(c))
             if strict:
-                parsed = F.when(
-                    F.col(c).isNotNull() & parsed.isNull(),
+                parsed[c] = F.when(
+                    F.col(c).isNotNull() & parsed[c].isNull(),
                     F.raise_error(
                         F.concat(
                             F.lit(
@@ -100,8 +101,9 @@ def read_ride_csv(
                             F.col(c),
                         )
                     ).cast("timestamp"),
-                ).otherwise(parsed)
-            df = df.withColumn(c, parsed)
+                ).otherwise(parsed[c])
+        # one projection for both columns: one analyser pass, not two
+        df = df.withColumns(parsed)
     return df
 
 

@@ -217,9 +217,40 @@ def test_key_determinism_and_uuid_mode(spark, fixture):
     ids2 = sorted(r["id"] for r in result2.tables["member_dimension"].collect())
     assert ids1 == ids2  # sha2 keys reproducible
 
-    uuid_res = run_citibike_etl(spark, path, key_mode="uuid")
+    uuid_res = run_citibike_etl(spark, path, key_mode="uuid", fact_strategy="join")
     uuid_ids = [r["id"] for r in uuid_res.tables["member_dimension"].collect()]
     assert len(uuid_ids) == len(ids1) and set(uuid_ids) != set(ids1)
+
+    # derived fact keys are sha2: they could never match a uuid key
+    with pytest.raises(ValueError, match="uuid"):
+        run_citibike_etl(spark, path, key_mode="uuid")
+
+
+def test_uuid_join_written_keys_resolve(spark, fixture, tmp_path):
+    """A uuid depends on the task that drew it, so the fact must join
+    the dimensions as written, not re-evaluate them: the returned
+    dimensions are the written ones, the fact reads them, and all six
+    FKs of the written fact resolve against the written dimensions."""
+    from citybikedatawarehouse_spark.operators.validation import (
+        citibike_star_checks,
+    )
+
+    path, expected = fixture
+    out = str(tmp_path / "warehouse")
+    result = run_citibike_etl(
+        spark, path, out_dir=out, key_mode="uuid", fact_strategy="join"
+    )
+    for name, df in result.tables.items():
+        if name != "ride_fact":
+            assert all(f"/{name}/" in f for f in df.inputFiles()), name
+            assert any(f"/{name}/" in f for f in result.tables["ride_fact"].inputFiles())
+    written = {name: spark.read.parquet(f"{out}/{name}") for name in result.tables}
+    assert written["ride_fact"].count() == expected["n_rows"]
+    ids = [r["id"] for r in written["member_dimension"].collect()]
+    assert all(len(i) == 36 for i in ids)  # uuid, not sha2 hex
+    report = citibike_star_checks(written).collect()
+    bad = {r["constraint_name"]: r["violations"] for r in report if r["violations"]}
+    assert bad == {}, f"unexpected violations: {bad}"
 
 
 def test_join_strategy_matches_derive(spark, fixture):
@@ -252,26 +283,48 @@ def test_parquet_write_partitioned(spark, fixture, tmp_path):
 
     path, _ = fixture
     out = str(tmp_path / "warehouse")
-    run_citibike_etl(spark, path, out_dir=out)
+    result = run_citibike_etl(spark, path, out_dir=out)
     assert os.path.isdir(f"{out}/ride_fact")
     parts = [p for p in os.listdir(f"{out}/ride_fact") if p.startswith("year=")]
     assert parts  # partitioned layout materialized
-    fact = spark.read.parquet(f"{out}/ride_fact")
-    assert fact.count() > 0
+    # each written table holds exactly the rows of the returned one
+    assert len(result.tables) == 5
+    for name, df in result.tables.items():
+        written = spark.read.parquet(f"{out}/{name}").select(*df.columns)
+        assert sorted(map(repr, written.collect())) == sorted(
+            map(repr, df.collect())
+        ), name
 
 
-def test_etl_strict_mode_passthrough(spark, tmp_path):
-    """strict=True on the pipeline surfaces the reader's fail-fast
-    contract end-to-end: a bad timestamp kills the ETL; the default
-    lenient run completes on the same file."""
+def test_load_jobs_attributed_and_cache_free(spark, fixture, tmp_path):
+    """Every job of a load runs under the caller's job group, even
+    though the five tables are written from their own threads; the
+    job count is pinned (a change in it is a regression signal); and
+    the load leaves nothing persisted."""
+    path, _ = fixture
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.catalog.clearCache()
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "test-etl-attribution"
+    sc.setJobGroup(group, "etl load")
+    try:
+        run_citibike_etl(spark, path, out_dir=str(tmp_path / "warehouse"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup(group)) == 10
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _write_bad_timestamp_csv(path):
+    """Two rides, the second with an unparseable start timestamp."""
     import csv as csvmod
 
-    import pytest
-
-    from citybikedatawarehouse_spark.etl import run_citibike_etl
     from tests.citibike_fixture import HEADER
 
-    path = str(tmp_path / "etl_bad.csv")
     with open(path, "w", newline="") as f:
         w = csvmod.writer(f, delimiter=";")
         w.writerow(HEADER)
@@ -285,9 +338,51 @@ def test_etl_strict_mode_passthrough(spark, tmp_path):
              "A", "S1", "B", "S2", "40.7", "-74.0", "40.71", "-74.01",
              "casual"]
         )
+
+
+def test_etl_strict_mode_passthrough(spark, tmp_path):
+    """strict=True on the pipeline surfaces the reader's fail-fast
+    contract end-to-end: a bad timestamp kills the ETL; the default
+    lenient run completes on the same file."""
+    path = str(tmp_path / "etl_bad.csv")
+    _write_bad_timestamp_csv(path)
     lenient = run_citibike_etl(spark, path)
     assert lenient.tables["ride_fact"].count() == 2  # rows kept
     with pytest.raises(Exception, match="garbage-ts"):
         run_citibike_etl(spark, path, strict=True).tables[
             "ride_fact"
         ].collect()
+
+
+def test_etl_strict_mode_write_fails_cleanly(spark, tmp_path):
+    """With an output directory, a strict load raises the bad value's
+    error, and only after every sibling table write has stopped."""
+    path = str(tmp_path / "etl_bad.csv")
+    _write_bad_timestamp_csv(path)
+    with pytest.raises(Exception, match="garbage-ts"):
+        run_citibike_etl(spark, path, out_dir=str(tmp_path / "wh"), strict=True)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_fact_written_after_dimensions(spark, fixture, tmp_path, monkeypatch):
+    """The four dimension writes run side by side; the fact's write
+    starts only after all of them have finished."""
+    import os
+    import time
+
+    from citybikedatawarehouse_spark import etl
+    from citybikedatawarehouse_spark.sources.writers import write_parquet
+
+    spans = {}
+
+    def timed_write(df, path, **kwargs):
+        start = time.monotonic()
+        write_parquet(df, path, **kwargs)
+        spans[os.path.basename(path)] = (start, time.monotonic())
+
+    monkeypatch.setattr(etl, "write_parquet", timed_write)
+    path, _ = fixture
+    run_citibike_etl(spark, path, out_dir=str(tmp_path / "wh"))
+    fact_start, _ = spans.pop("ride_fact")
+    assert len(spans) == 4
+    assert all(end <= fact_start for _, end in spans.values())
